@@ -128,10 +128,10 @@ def _pcalib_ms():
     local[N] stages experience. Telemetry must never abort the run.
     """
     import hashlib
+    import math
     import threading
 
     n = os.cpu_count() or 8
-    results = [0.0] * n
 
     def work(i: int) -> None:
         t0 = time.perf_counter()
@@ -139,13 +139,16 @@ def _pcalib_ms():
         for _ in range(_PCALIB_ITERS):
             h.update(_PCALIB_BUF)
         if not h.hexdigest():  # unreachable; anchors the loop as live
-            results[i] = float("nan")
             return
         results[i] = (time.perf_counter() - t0) * 1000.0
 
     best = None
     try:
         for _ in range(2):
+            # NaN until its worker finishes: a worker that raised
+            # leaves NaN (not a plausible-looking 0.0), and the whole
+            # reading is dropped
+            results = [math.nan] * n
             threads = [
                 threading.Thread(target=work, args=(i,)) for i in range(n)
             ]
@@ -153,6 +156,8 @@ def _pcalib_ms():
                 t.start()
             for t in threads:
                 t.join()
+            if any(math.isnan(r) for r in results):
+                return None
             med = sorted(results)[n // 2]
             best = med if best is None else min(best, med)
     except Exception:  # noqa: BLE001

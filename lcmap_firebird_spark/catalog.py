@@ -221,9 +221,15 @@ def write_partitioned(
     wide-row locality of resources/schema.cql:54,142: one chip's
     pixels colocate under one partition directory.
 
-    Scale note: callers should ensure ~100 MB-1 GB per partition file
-    at target SF; `maxRecordsPerFile` bounds stragglers.
+    The frame is first clustered by the partition columns, so each
+    directory gets ONE file from one task — however many tasks
+    produced the rows (pyccd.detect fans a chip out over every core).
+    Scale note: one partition value's rows land in one task; keep a
+    value at ~100 MB-1 GB at target SF; `maxRecordsPerFile` bounds
+    stragglers.
     """
+    if partition_cols:
+        df = df.repartition(*partition_cols)
     writer = df.write.mode(mode)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)

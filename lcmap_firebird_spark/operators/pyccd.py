@@ -11,8 +11,11 @@ pixel's 8-band time series (:151-168), `rdd()` flatMaps it
 Spark-native form: the input is already dense-wide (one row per
 pixel, arrays aligned to `dates` — ccdc/timeseries.py:33-45), so
 detection is a pure MAP: `mapInPandas`, one pixel row in → N segment
-rows out, ZERO shuffles. The reference's flatMap shape, kept — but
-visible to Catalyst and Arrow-batched.
+rows out. The reference's flatMap shape, kept — but visible to
+Catalyst and Arrow-batched. Its one shuffle is a round-robin
+repartition to the default parallelism ahead of the kernel (the
+reference's `repartition(PRODUCT_PARTITIONS)`,
+ccdc/timeseries.py:125): pixels are cheap to move and costly to fit.
 
 Model fidelity (round 2): per-band fits are LASSO over the harmonic
 basis — the model family lcmap-pyccd actually uses (its lasso model
@@ -240,7 +243,8 @@ def detect(
     peek: int = 3,
     harmonics: int = 0,
 ) -> DataFrame:
-    """Dense-wide ARD → 40-field segments (mapInPandas, no shuffle).
+    """Dense-wide ARD → 40-field segments (round-robin fan-out to every
+    core, then mapInPandas).
 
     Every pixel emits ≥1 row: detected segments plus a trailing open
     segment, or the sentinel when fewer than `min_obs` clear
@@ -350,14 +354,16 @@ def detect(
         )
         return rows
 
-    # CPU-bound pandas stage: a compact source (one parquet split)
-    # would otherwise run every pixel's lasso fits on a single core —
-    # pin parallelism like segmentation.ccd_segments does (PLANS.md:
-    # AQE's byte heuristic mis-sizes CPU-bound pandas stages)
+    # CPU-bound pandas stage (~0.14-0.27 s of lasso fits per ~10 KB
+    # pixel row): always fan pixels out round-robin over every core,
+    # like segmentation.ccd_segments pins its keyed repartition
+    # (PLANS.md rule 11). No split-count probe: after a selective
+    # read's dynamic partition pruning, one chip arrives as ONE
+    # non-empty split of a many-split scan. Round-robin, not hashed
+    # pixel keys: one split's 16 pixels land exactly 4 per core on 4
+    # cores, where hashing 16 keys leaves some core more.
     n_parts = ard.sparkSession.sparkContext.defaultParallelism
-    if ard.rdd.getNumPartitions() < n_parts:
-        ard = ard.repartition(n_parts)
-    return ard.mapInPandas(kernel, schema)
+    return ard.repartition(n_parts).mapInPandas(kernel, schema)
 
 
 def chip_table(segments: DataFrame) -> DataFrame:

@@ -8,10 +8,13 @@ DataFrame plan: selective read (J1) → per-pixel applyInPandas
 segmentation (U3) → cached once → three schema-conforming projections
 (P1) → partitioned parquet sinks (S7/S8).
 
-Scale: the only wide ops are the pixel-key shuffle into
-applyInPandas groups and the partitioned write; both are keyed by
-(cx, cy, ...) so chip locality (the reference's Cassandra partition
-key, resources/schema.cql:54) is preserved end to end.
+Scale: the wide ops are the pixel fan-out ahead of detection (a
+pixel-key shuffle into applyInPandas groups here, a round-robin
+repartition in pyccd.detect), the chip/pixel projections' keyed
+aggregations, and the sinks' (cx, cy) clustering before each
+partitioned write. Every chip directory gets one file per table: the
+chip locality of the reference's Cassandra partition key
+(resources/schema.cql:54).
 """
 
 from __future__ import annotations
@@ -86,9 +89,10 @@ def changedetection_ard(
 ) -> dict[str, DataFrame]:
     """Reference-exact variant over dense-wide ARD: the full
     core.py:53-75 dataflow with pyccd's 40-field schema —
-    selective read (J1) → mapInPandas multi-band detection (U3,
-    zero shuffles) → cached → the reference's three conforming
-    tables (chip/pixel/segment) → partitioned sinks."""
+    selective read (J1) → round-robin fan-out of the pixels over
+    every core → mapInPandas multi-band detection (U3) → cached →
+    the reference's three conforming tables (chip/pixel/segment) →
+    sinks clustered by chip, one file per (cx, cy) directory."""
     from ..operators import pyccd
 
     src = ard

@@ -213,6 +213,31 @@ def test_bench_calibration_loop_is_stable():
     assert la is not None and len(la) == 3
 
 
+def test_pcalib_failed_worker_reads_none(monkeypatch):
+    """A worker thread that raises must not leave a 0.0 slot that
+    reads as a plausible (fast, idle-looking) median: the whole
+    parallel reading is None."""
+    import hashlib
+    import itertools
+
+    sys.path.insert(0, REPO)
+    import bench
+
+    real_md5 = hashlib.md5
+    calls = itertools.count()
+
+    def md5_failing_once(*args):
+        if next(calls) == 0:
+            raise RuntimeError("injected worker failure")
+        return real_md5(*args)
+
+    monkeypatch.setattr(bench, "_PCALIB_ITERS", 1)
+    monkeypatch.setattr(hashlib, "md5", md5_failing_once)
+    monkeypatch.setattr(threading, "excepthook", lambda args: None)
+    assert bench._pcalib_ms() is None
+    assert next(calls) >= 2  # the other workers did run
+
+
 def test_bench_unknown_subset_exits_loudly():
     r = _run({"SPARK_GRAFT_BENCH_QUERIES": "a4_pricing_summary,zz_typo"}, timeout=120)
     assert r.returncode == 2

@@ -101,6 +101,22 @@ def test_write_partitioned_overwrite_is_dynamic(spark, tmp_path):
     assert got == {(1, 1): "new-a", (2, 2): "old-b"}
 
 
+def test_write_partitioned_one_file_per_partition(spark, tmp_path):
+    """The sink clusters by its partition columns first: rows spread
+    over many tasks still land in ONE file per (cx, cy) directory."""
+    path = tmp_path / "clustered"
+    df = spark.createDataFrame(
+        [(1 + i % 2, 1, i) for i in range(40)], "cx int, cy int, v int"
+    ).repartition(4)
+    assert df.rdd.getNumPartitions() == 4
+    write_partitioned(df, str(path), mode="overwrite")
+    dirs = sorted(p.relative_to(path).as_posix() for p in path.glob("cx=*/cy=*"))
+    assert dirs == ["cx=1/cy=1", "cx=2/cy=1"]
+    for d in dirs:
+        assert len(list((path / d).glob("part-*.parquet"))) == 1, d
+    assert spark.read.parquet(str(path)).count() == 40
+
+
 # --- sources/ids.py: loud fan-out control ----------------------------------
 
 

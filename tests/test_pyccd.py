@@ -5,9 +5,12 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from lcmap_firebird_spark import schemas
 from lcmap_firebird_spark.operators import pyccd
+from lcmap_firebird_spark.operators.relational import selective_read
+from lcmap_firebird_spark.sources.ids import chip_ids
 
 
 def _ard_row(cx, cy, px, py, dates, bands, qas):
@@ -126,6 +129,62 @@ def test_projection_tables_conform(ard):
     assert len(pyccd.segment_table(seg).schema.fields) == 38
     assert pyccd.chip_table(seg).count() == 1  # one chip
     assert pyccd.pixel_table(seg).count() == 2  # two pixels
+
+
+def test_detect_fans_pruned_chip_out_over_every_core(spark, tmp_path):
+    """A chip restricted out of chip-partitioned ARD by a selective
+    read arrives as ONE non-empty split of a many-split scan (dynamic
+    partition pruning). Detection must still spread its pixels over
+    every core, and the rows must not depend on that layout."""
+    rng = np.random.default_rng(23)
+    n = 40
+    dates = [100 + 16 * i for i in range(n)][::-1]  # DESC delivery
+
+    def series(breaky):
+        base = np.full(n, 1000.0)
+        if breaky:
+            base[n // 2 :] = 3000.0
+        return {
+            c: [int(v) for v in (base + rng.normal(0, 5.0, n))[::-1]]
+            for c in pyccd.BAND_MAP
+        }
+
+    side = 4  # the restricted chip: 16 pixels
+    rows = [
+        _ard_row(0, 0, px, py, dates, series((px + py) % 2 == 0), [66] * n)
+        for px in range(side)
+        for py in range(side)
+    ]
+    # decoy chips, one small file each: enough that the unpruned scan
+    # packs them into at least one split per core
+    n_cores = spark.sparkContext.defaultParallelism
+    rows += [
+        _ard_row(3000 * (k + 1), 0, 0, 0, dates, series(False), [66] * n)
+        for k in range(n_cores * n_cores)
+    ]
+    path = str(tmp_path / "ard")
+    spark.createDataFrame(
+        [tuple(r[f.name] for f in schemas.ard_schema().fields) for r in rows],
+        schemas.ard_schema(),
+    ).coalesce(1).write.partitionBy("cx", "cy").parquet(path)
+
+    scan = spark.read.parquet(path)
+    # the layout a split-count probe misreads as already parallel
+    assert scan.rdd.getNumPartitions() >= n_cores
+    src = selective_read(scan, chip_ids(spark, [(0, 0)]), ["cx", "cy"])
+    out = pyccd.detect(src)
+    parts = out.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert parts == min(side * side, n_cores)
+
+    def key(r):
+        return (r.cx, r.cy, r.px, r.py, r.sday)
+
+    got = sorted(out.collect(), key=key)
+    want = sorted(pyccd.detect(src.coalesce(1)).collect(), key=key)
+    assert {(r.px, r.py) for r in got} == {
+        (px, py) for px in range(side) for py in range(side)
+    }
+    assert got == want
 
 
 def test_lasso_shrinks_spurious_harmonics_ols_keeps():
